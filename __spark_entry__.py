@@ -404,11 +404,13 @@ def q13_bloom_search_verified(spark, sf_dir):
     """Multidimensional Bloom containment search over documents
     (lang dimension + two text-token dimensions), exact post-verified —
     the reference `search` semantics (`ContainerImpl.java:155-182`) made
-    DuckDB-checkable (FIXTURES §5)."""
+    DuckDB-checkable (FIXTURES §5). Pinned to the NumPy slab kernel:
+    ``via="auto"`` resolves to the linear scan on this small index, which
+    q29 already checks."""
     r = _doc_index(spark, sf_dir)
     docs = _t(spark, sf_dir, "documents")
     toks = ["lang=es", "tok=spark", "tok=window"]
-    return (r.search_verified(toks, docs)
+    return (r.search_verified(toks, docs, via="slab")
             .select("doc_id", "lang")
             .orderBy("doc_id"))
 
@@ -957,7 +959,8 @@ def q33_search_verified_many(spark, sf_dir):
     query-spec table, higher-order forall token predicate) — the
     Q-at-once form of the flagship q24 (`ContainerImpl.java:155-182`
     amortized over a batch). Oracle = UNION ALL of per-query verified
-    selects over the same stored parquet."""
+    selects over the same stored parquet. Pinned to the batched NumPy
+    slab kernel (`search_keys_many`), which no other query checks."""
     r, df = _flagship_reader(spark)
     qs = {
         "bash_w2": r.transcript_query_tokens("assistant", "Bash",
@@ -967,7 +970,7 @@ def q33_search_verified_many(spark, sf_dir):
         "grep_w1": r.transcript_query_tokens(None, "Grep", ["w00001"]),
         "absent": r.transcript_query_tokens(None, None, ["zzqnope"]),
     }
-    return (r.search_verified_many(qs, df)
+    return (r.search_verified_many(qs, df, via="slab")
             .select("query", "conv_id", "turn_idx", "role", "tool")
             .orderBy("query", "conv_id", "turn_idx"))
 

@@ -58,8 +58,10 @@ def decode_image(payload: bytes) -> dict:
 
     * **PPM (P6)**: ASCII header ``P6 <w> <h> <maxval>`` with ``#``
       comments, then ``3·w·h`` binary RGB bytes (validated).
-    * **BMP**: ``BM`` magic; int32 width/height at offsets 18/22 (height
-      may be negative = top-down), uint16 bits-per-pixel at 28.
+    * **BMP**: ``BM`` magic; uncompressed BITMAPINFOHEADER only (header
+      size 40 at offset 14, biCompression 0 at 30); int32 width/height
+      at offsets 18/22 (height may be negative = top-down), uint16
+      bits-per-pixel at 28.
 
     Anything else raises ``ValueError`` — honest failure, never a
     fabricated shape (that is :func:`fake_decoder`'s job)."""
@@ -88,8 +90,14 @@ def decode_image(payload: bytes) -> dict:
             raise ValueError("PPM pixel data shorter than w*h*3")
         return {"height": h, "width": w, "channels": 3, "n_frames": 1}
     if payload[:2] == b"BM" and len(payload) >= 54:
-        w, h = struct.unpack_from("<ii", payload, 18)
-        bits = struct.unpack_from("<H", payload, 28)[0]
+        hdr, w, h, _, bits, comp = struct.unpack_from("<IiiHHI", payload, 14)
+        if hdr != 40 or comp != 0:
+            # other header sizes place width/height/bpp elsewhere, and
+            # compressed pixel data has no w*h layout to vouch for
+            raise ValueError(
+                f"unsupported BMP variant (info header {hdr} bytes, "
+                f"compression {comp}): only uncompressed "
+                "BITMAPINFOHEADER")
         if w <= 0 or h == 0 or bits not in (8, 24, 32):
             raise ValueError(f"unsupported BMP (w={w}, h={h}, bpp={bits})")
         return {"height": abs(h), "width": w,

@@ -200,7 +200,7 @@ shutil.rmtree(warm_idx, ignore_errors=True)
 warm_src = tdf.limit(50_000)
 BloomIndexWriter(spark, cfg).build(warm_src, warm_idx)
 warm_reader = BloomIndexReader(spark, warm_idx)
-warm_reader.search_many(mk_queries(warm_reader, 8)).count()
+warm_reader.search_many(mk_queries(warm_reader, 8), via="slab").count()
 warm_reader.search_linear_many(mk_queries(warm_reader, 8)).count()
 shutil.rmtree(warm_idx, ignore_errors=True)
 
@@ -213,7 +213,7 @@ build_sec = time.monotonic() - t0
 reader = BloomIndexReader(spark, idx)
 queries = mk_queries(reader, n_queries)
 t0 = time.monotonic()
-hits = reader.search_many(queries).count()
+hits = reader.search_many(queries, via="slab").count()
 query_sec = time.monotonic() - t0
 
 # ---- timed batched queries (distributed Linear I1, all-JVM codegen:

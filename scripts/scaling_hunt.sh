@@ -16,8 +16,24 @@ for i in $(seq 1 "$ATTEMPTS"); do
   # poll budget) for parallel_ratio >= MIN_RATIO AND an absolute
   # MIN_GBPS8 floor, then launch immediately. A failed probe SKIPS the
   # attempt (set RUN_ANYWAY=1 to force a for-the-log run instead).
-  if ! python scripts/bw_probe.py "${MIN_RATIO:-2.5}" "${PROBE_WAIT:-900}" \
-        60 "${MIN_GBPS8:-10}"; then
+  if ! python - "${MIN_RATIO:-2.5}" "${PROBE_WAIT:-900}" \
+        "${MIN_GBPS8:-10}" <<'EOF'
+import sys, time
+sys.path.insert(0, "scripts")
+# scaling_bench reads its own CLI at import time: hand it an empty argv
+(min_ratio, max_wait, min_gbps8), sys.argv[1:] = map(float, sys.argv[1:4]), []
+from scaling_bench import bandwidth_health
+deadline = time.monotonic() + max_wait
+while True:
+    bw = bandwidth_health()
+    print(bw, file=sys.stderr, flush=True)
+    if bw["parallel_ratio"] >= min_ratio and bw["gbps_8t"] >= min_gbps8:
+        sys.exit(0)
+    if time.monotonic() >= deadline:
+        sys.exit(1)
+    time.sleep(60)
+EOF
+  then
     if [ "${RUN_ANYWAY:-0}" != "1" ]; then
       echo "attempt $i: no healthy sustained-bandwidth window in probe budget; skipping" >&2
       continue

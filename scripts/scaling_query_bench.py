@@ -8,8 +8,9 @@ this script reproduces that shape:
 
   1. build the index ONCE (identical artifact bytes for every level);
   2. per parallelism level, a FRESH ``taskset``-pinned session times the
-     same batched query workload, slab and all-JVM-linear strategies,
-     several reps, best per level reported;
+     same batched query workload through each strategy pinned by
+     ``via`` (NumPy slab, all-JVM linear, all-JVM slab-SQL), several
+     reps, best per level reported;
   3. append the table to BENCH.md.
 
 The canary/healthy-window protocol matches scaling_bench.py (this VM has
@@ -84,12 +85,12 @@ def mk_queries(n):
 
 queries = mk_queries(n_queries)
 # warm-up: JIT, python workers, parquet footers (real executors are warm)
-reader.search_many(mk_queries(8)).count()
+reader.search_many(mk_queries(8), via="slab").count()
 reader.search_linear_many(mk_queries(8)).count()
 reader.search_slab_sql_many(mk_queries(8)).count()
 slab, linear, slabsql, hits = [], [], [], set()
 for _ in range(reps):
-    t0 = time.monotonic(); h1 = reader.search_many(queries).count()
+    t0 = time.monotonic(); h1 = reader.search_many(queries, via="slab").count()
     slab.append(time.monotonic() - t0)
     t0 = time.monotonic(); h2 = reader.search_linear_many(queries).count()
     linear.append(time.monotonic() - t0)

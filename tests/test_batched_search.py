@@ -27,15 +27,17 @@ def test_search_many_matches_individual_searches(spark, reader):
                                                            "w00002"]),
         "absent": ["tok=zzznope"],
     }
-    batched = reader.search_many(queries).toPandas()
-    for name, toks in queries.items():
-        single = reader.search(toks).toPandas()
-        got = set(map(tuple, batched[batched["query"] == name]
-                      [["conv_id", "turn_idx"]].itertuples(index=False)))
-        want = set(map(tuple, single[["conv_id", "turn_idx"]]
-                       .itertuples(index=False)))
-        assert got == want, name
-    assert (batched["query"] == "absent").sum() == 0
+    for via in ("slab", "linear"):
+        batched = reader.search_many(queries, via=via).toPandas()
+        for name, toks in queries.items():
+            single = reader.search(toks, via=via).toPandas()
+            got = set(map(tuple, batched[batched["query"] == name]
+                          [["conv_id", "turn_idx"]]
+                          .itertuples(index=False)))
+            want = set(map(tuple, single[["conv_id", "turn_idx"]]
+                           .itertuples(index=False)))
+            assert got == want, (via, name)
+        assert (batched["query"] == "absent").sum() == 0
 
 
 def test_search_many_empty_query_matches_all(spark, reader):
@@ -59,7 +61,7 @@ def test_search_linear_many_matches_search_many(spark, reader):
     }
     cols = ["query", "conv_id", "turn_idx"]
     lin = reader.search_linear_many(queries).toPandas()
-    slab = reader.search_many(queries).toPandas()
+    slab = reader.search_many(queries, via="slab").toPandas()
     assert set(map(tuple, lin[cols].itertuples(index=False))) \
         == set(map(tuple, slab[cols].itertuples(index=False)))
     assert (lin["query"] == "absent").sum() == 0
@@ -336,7 +338,7 @@ def test_linear_many_applies_per_query_gate_pruning(spark, tmp_path):
     # includes it — only per-query restriction keeps the needle exact
     queries = {"q": toks, "junk": ["tok=junk0_0"]}
     lin = reader.search_linear_many(queries).toPandas()
-    slab = reader.search_many(queries).toPandas()
+    slab = reader.search_many(queries, via="slab").toPandas()
     key = ["query", "conv_id", "turn_idx"]
     assert (set(map(tuple, lin[key].itertuples(index=False)))
             == set(map(tuple, slab[key].itertuples(index=False))))
@@ -372,8 +374,7 @@ def test_choose_strategy_regimes(spark, reader, monkeypatch):
     (VERDICT r3 item 7 + r4 item 3): tiny population -> linear storage
     scan; large population -> NumPy slab for a SINGLE query but the
     all-JVM slab-SQL path for any BATCH (the slab form with the >=0.8
-    N->4N scaling pairs); prefer_jvm flips the single-query regime to
-    slab-SQL too. Explicit via always wins; junk is rejected."""
+    N->4N scaling pairs). Explicit via always wins; junk is rejected."""
     assert reader.slot_count() <= reader.LINEAR_MAX_SLOTS
     assert reader.choose_strategy() == "linear"
     assert reader._resolve_via("auto") == "linear"
@@ -383,12 +384,27 @@ def test_choose_strategy_regimes(spark, reader, monkeypatch):
     # batched default is slab-SQL (VERDICT r4 item 3)
     assert reader.choose_strategy(n_queries=2) == "slab_sql"
     assert reader._resolve_via("auto", 256) == "slab_sql"
-    monkeypatch.setattr(reader, "prefer_jvm", True)
-    assert reader.choose_strategy() == "slab_sql"
     # explicit choice bypasses the selector entirely
     assert reader._resolve_via("linear") == "linear"
     with pytest.raises(ValueError):
         reader._resolve_via("bogus")
+
+
+def test_search_many_schema_same_for_every_strategy(spark, reader):
+    """search_many returns one column order whatever strategy runs:
+    ``query`` first, then the storage columns — on a batch with hits, an
+    all-miss batch (empty result) and a match-all (empty-token) query."""
+    hit = reader.transcript_query_tokens("assistant", None, ["w00001"])
+    batches = {
+        "hits": {"a": hit, "absent": ["tok=zzznope"]},
+        "all_miss": {"x": ["tok=zzznope"], "y": ["tok=zzqnever"]},
+        "match_all": {"every": []},
+    }
+    want = ["query", *reader.storage().columns]
+    for label, qs in batches.items():
+        for via in ("auto", "linear", "slab", "slab_sql"):
+            assert reader.search_many(qs, via=via).columns == want, \
+                (label, via)
 
 
 def test_search_verified_auto_matches_explicit(spark, reader):
@@ -695,7 +711,7 @@ def test_distributed_planner_wired_into_strategies(spark, reader,
 
 def test_distributed_planner_single_query_paths(spark, reader,
                                                 monkeypatch):
-    """The single-query surfaces (search, search_linear, get,
+    """The single-query surfaces (search under every strategy, get,
     get_bitexact, get_many) share the planner-regime switch: forced
     into the distributed regime — and then with every plan degraded to
     ALL_SHARDS — each returns exactly its driver-planned rows."""
@@ -704,10 +720,9 @@ def test_distributed_planner_single_query_paths(spark, reader,
 
     def snap():
         return {
-            "search": sorted(map(tuple, reader.search(toks)
-                                 .select(*cols).collect())),
-            "linear": sorted(map(tuple, reader.search_linear(toks)
-                                 .select(*cols).collect())),
+            **{v: sorted(map(tuple, reader.search(toks, via=v)
+                             .select(*cols).collect()))
+               for v in ("slab", "linear", "slab_sql")},
             "get": sorted(map(tuple, reader.get(toks)
                               .select(*cols).collect())),
             "bx": sorted(map(tuple, reader.get_bitexact(toks)
@@ -717,6 +732,7 @@ def test_distributed_planner_single_query_paths(spark, reader,
         }
 
     want = snap()
+    assert want["slab"] == want["linear"] == want["slab_sql"]
     monkeypatch.setattr(reader, "DRIVER_PRUNE_MAX_SHARDS", 0)
     assert snap() == want
     monkeypatch.setattr(

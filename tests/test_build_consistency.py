@@ -18,6 +18,14 @@ def _cfg(**kw):
     return IndexConfig(**base)
 
 
+def _count(r, toks) -> int:
+    """``r.search(toks).count()`` through BOTH strategies (slab artifacts
+    and storage scan), which must agree."""
+    n = [r.search(toks, via=via).count() for via in ("slab", "linear")]
+    assert n[0] == n[1], (toks, n)
+    return n[0]
+
+
 def _docs(spark, n):
     """n rows with guaranteed-nonempty text (nothing drops at build)."""
     rows = [(f"conv{i:03d}", 0, "user", f"word{i} common tail{i % 5}",
@@ -54,7 +62,7 @@ def test_compact_removes_fully_tombstoned_shard(spark, tmp_path):
     assert (st2["shard"] == shard).sum() == 0
     assert shard not in set(r2.manifest()["shard"])
     # empty-query search (matches everything) sees no resurrected rows
-    assert r2.search([]).count() == total - n_doomed
+    assert _count(r2, []) == total - n_doomed
 
 
 def test_resume_sees_tag_and_payload_changes(spark, tmp_path):
@@ -68,14 +76,17 @@ def test_resume_sees_tag_and_payload_changes(spark, tmp_path):
     w.build(df, path)
     r0 = BloomIndexReader(spark, path)
     n_shards_live = r0.storage().select("shard").distinct().count()
-    assert r0.search(["tool=grep"]).count() == 20
+    assert _count(r0, ["tool=grep"]) == 20
     changed = df.withColumn("tool", F.lit("bash"))
     stats = w.build(changed, path, resume=True)
     assert stats["built"] == n_shards_live, \
         "tag change must dirty every populated shard"
     r = BloomIndexReader(spark, path)
-    assert r.search_verified(["tool=bash"], changed).count() == 20
-    assert r.search_verified(["tool=grep"], changed).count() == 0
+    for via in ("slab", "linear"):
+        assert r.search_verified(["tool=bash"], changed,
+                                 via=via).count() == 20, via
+        assert r.search_verified(["tool=grep"], changed,
+                                 via=via).count() == 0, via
 
 
 def test_fresh_rebuild_drops_ghost_shards(spark, tmp_path):
@@ -100,7 +111,7 @@ def test_fresh_rebuild_drops_ghost_shards(spark, tmp_path):
     r = BloomIndexReader(spark, path)
     assert r.value_count() == n_sub
     assert r.storage().count() == n_sub
-    assert r.search([]).count() == n_sub  # empty query matches everything
+    assert _count(r, []) == n_sub  # empty query matches everything
     assert int(r.manifest()["n_turns"].sum()) == n_sub
     assert set(r.manifest()["shard"]) == set(keep_shards)
 
@@ -128,13 +139,14 @@ def test_duplicate_filters_across_batches_search_once(spark, tmp_path):
     finally:
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", prev)
     r = BloomIndexReader(spark, path)
-    out = r.search_many({"q": ["tok=alpha0"]}).toPandas()
-    # exactly the two storage rows carrying alpha0, each once
-    assert len(out) == len(out.drop_duplicates(["query", "conv_id",
-                                                "turn_idx"]))
-    assert sorted(out["conv_id"]) == ["conv0_0", "conv1_0"]
+    for via in ("slab", "linear"):
+        out = r.search_many({"q": ["tok=alpha0"]}, via=via).toPandas()
+        # exactly the two storage rows carrying alpha0, each once
+        assert len(out) == len(out.drop_duplicates(["query", "conv_id",
+                                                    "turn_idx"])), via
+        assert sorted(out["conv_id"]) == ["conv0_0", "conv1_0"], via
     # single-query path agrees
-    assert r.search(["tok=alpha0"]).count() == 2
+    assert _count(r, ["tok=alpha0"]) == 2
 
 
 def test_jvm_tokenizer_nonstring_and_missing_tag_columns(spark, tmp_path):

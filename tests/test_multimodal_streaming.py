@@ -81,6 +81,23 @@ def test_real_decoders_parse_headers_exactly():
         M.decode_audio(b"OggS")
 
 
+def test_decode_image_rejects_other_bmp_variants():
+    """Only the uncompressed BITMAPINFOHEADER layout is decoded: a
+    BITMAPCOREHEADER file (12-byte info header, int16 dims) or an RLE8
+    payload must raise instead of reporting a misread shape."""
+    import struct
+    core = (b"BM" + struct.pack("<IHHI", 26 + 32, 0, 0, 26)
+            + struct.pack("<IhhHH", 12, 4, 4, 1, 24) + bytes(64))
+    with pytest.raises(ValueError, match="BITMAPINFOHEADER"):
+        M.decode_image(core)
+    rle8 = (b"BM" + struct.pack("<IHHI", 54 + 1024 + 8, 0, 0, 54 + 1024)
+            + struct.pack("<IiiHHIIiiII", 40, 4, 4, 1, 8, 1, 8,
+                          0, 0, 256, 0)
+            + bytes(1024) + bytes([4, 0, 0, 0, 0, 1, 0, 0]))
+    with pytest.raises(ValueError, match="compression 1"):
+        M.decode_image(rle8)
+
+
 def test_real_media_end_to_end_dims(spark):
     """extract_features over REAL synthesized PPM/BMP/WAV files with the
     DEFAULT decoder: every height/width/channels/n_frames must equal the

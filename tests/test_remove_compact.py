@@ -10,6 +10,17 @@ from mdbloom.spark.query import BloomIndexReader
 from mdbloom.spark.transcripts import synthesize_transcripts
 
 
+def _search(r, toks, *cols):
+    """Rows of ``r.search(toks)`` projected to ``cols``, as a sorted list —
+    read through BOTH strategies (the slab artifacts and the storage
+    scan), which must agree at every point of a remove/compact history."""
+    got = [sorted(map(tuple, r.search(toks, via=via).select(*cols)
+                      .collect()))
+           for via in ("slab", "linear")]
+    assert got[0] == got[1], toks
+    return got[0]
+
+
 @pytest.fixture()
 def setup(spark, tmp_path):
     path = str(tmp_path / "idx")
@@ -36,9 +47,8 @@ def test_remove_hides_rows_and_compact_rebuilds(setup):
     # tombstoned rows vanish from search and counts immediately
     r2 = BloomIndexReader(spark, path)
     assert r2.value_count() == total - n_dead
-    hits = r2.search([]).toPandas()  # empty query = all values
-    got = set(map(tuple, hits[["conv_id", "turn_idx"]]
-                  .itertuples(index=False)))
+    # empty query = all values
+    got = set(_search(r2, [], "conv_id", "turn_idx"))
     dead = set(map(tuple, victims.toPandas().itertuples(index=False)))
     assert got.isdisjoint(dead)
     assert len(got) == total - n_dead
@@ -62,11 +72,8 @@ def test_remove_hides_rows_and_compact_rebuilds(setup):
     w.build(alive_src, fresh)
     rf = BloomIndexReader(spark, fresh)
     q = r3.transcript_query_tokens("assistant", None, ["w00001"])
-    a = set(map(tuple, r3.search(q).select("conv_id", "turn_idx")
-                .toPandas().itertuples(index=False)))
-    b = set(map(tuple, rf.search(q).select("conv_id", "turn_idx")
-                .toPandas().itertuples(index=False)))
-    assert a == b
+    assert (_search(r3, q, "conv_id", "turn_idx")
+            == _search(rf, q, "conv_id", "turn_idx"))
 
 
 def test_compact_artifacts_no_source(setup):
@@ -84,11 +91,10 @@ def test_compact_artifacts_no_source(setup):
 
     r2 = BloomIndexReader(spark, path)
     q = r2.transcript_query_tokens("assistant", None, ["w00001"])
-    def ids(hits):
-        return set(map(tuple, hits.select("conv_id", "turn_idx")
-                       .toPandas().itertuples(index=False)))
-    before = ids(r2.search(q))
-    all_before = ids(r2.search([]))
+    def ids(r, toks):
+        return _search(r, toks, "conv_id", "turn_idx")
+    before = ids(r2, q)
+    all_before = ids(r2, [])
 
     slots_before = r2.slot_count()
     stats = w.compact_artifacts(path)
@@ -99,8 +105,8 @@ def test_compact_artifacts_no_source(setup):
     assert r3.value_count() == total - n_dead
     assert r3.storage().count() == total - n_dead
     # live results bit-identical across the compaction
-    assert ids(r3.search(q)) == before
-    assert ids(r3.search([])) == all_before
+    assert ids(r3, q) == before
+    assert ids(r3, []) == all_before
     # physical slots for tombstoned keys are actually gone (every
     # victim key was unique enough that SOME slots must drop), and the
     # slab invariant slots >= live distinct filters still holds
@@ -121,7 +127,7 @@ def test_compact_artifacts_no_source(setup):
     assert st2["built"] == stats["built"]
     r4 = BloomIndexReader(spark, path)
     assert r4.value_count() == total - n_dead
-    assert ids(r4.search(q)) == before
+    assert ids(r4, q) == before
     assert r4.manifest()["fingerprint"].notna().all()
 
 
@@ -212,9 +218,7 @@ def test_remove_exact_reference_semantics(docs_setup):
     r = BloomIndexReader(spark, path)
     assert r.value_count() == 3
     assert r.filter_count() == n_filters
-    got = sorted(x.doc_id for x in
-                 r.search(["tok=hello"]).select("doc_id").collect())
-    assert got == [2]
+    assert _search(r, ["tok=hello"], "doc_id") == [(2,)]
     # payload column comes straight from storage (no source-table join)
     assert r.get(_toks((2, "en", "hello world alpha"))) \
         .select("text").collect()[0][0] == "hello world alpha"
@@ -245,8 +249,8 @@ def test_payload_multimap_roundtrip(docs_setup):
     assert hits["doc_id"].tolist() == [1, 2]
     assert set(hits["text"]) == {"hello world alpha"}
     # search returns the payload too
-    s = r.search(["lang=es"]).select("doc_id", "text").collect()
-    assert [(x.doc_id, x.text) for x in s] == [(4, "hola mundo gamma")]
+    assert _search(r, ["lang=es"], "doc_id", "text") \
+        == [(4, "hola mundo gamma")]
 
 
 def test_remove_where_predicate_delete(docs_setup):
@@ -262,9 +266,8 @@ def test_remove_where_predicate_delete(docs_setup):
     assert w.remove_where("text = 'hello world alpha'", path) == 2
     r = BloomIndexReader(spark, path)
     assert r.value_count() == 2
-    assert sorted(x.doc_id for x in
-                  r.search([]).select("doc_id").collect()) == [3, 4]
-    assert r.search(["tok=hello"]).count() == 0
+    assert _search(r, [], "doc_id") == [(3,), (4,)]
+    assert _search(r, ["tok=hello"], "doc_id") == []
 
     # idempotent: the victims are no longer live, so a re-run is a no-op
     assert w.remove_where("text = 'hello world alpha'", path) == 0
@@ -277,8 +280,7 @@ def test_remove_where_predicate_delete(docs_setup):
     assert w.remove_where("doc_id = 4", path) == 1
     r = BloomIndexReader(spark, path)
     assert r.value_count() == 1
-    assert [x.doc_id for x in r.search([]).select("doc_id").collect()] \
-        == [3]
+    assert _search(r, [], "doc_id") == [(3,)]
 
 
 def test_metrics_dataframe(setup):

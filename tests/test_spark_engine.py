@@ -142,7 +142,8 @@ def test_search_linear_equals_slab_search(spark, built_index):
         [],
     ]
     for toks in cases:
-        a = set(map(tuple, r.search(toks).select("conv_id", "turn_idx")
+        a = set(map(tuple, r.search(toks, via="slab")
+                    .select("conv_id", "turn_idx")
                     .toPandas().itertuples(index=False)))
         b = set(map(tuple, r.search_linear(toks)
                     .select("conv_id", "turn_idx")
@@ -286,11 +287,14 @@ def test_resume_rebuilds_only_changed_shards_and_matches_full(spark, tmp_path):
     assert ri.value_count() == rf.value_count()
     assert ri.filter_count() == rf.filter_count()
     toks = ri.transcript_query_tokens("assistant", None, ["w00001"])
-    a = set(map(tuple, ri.search(toks).select("conv_id", "turn_idx")
-                .toPandas().itertuples(index=False)))
-    b = set(map(tuple, rf.search(toks).select("conv_id", "turn_idx")
-                .toPandas().itertuples(index=False)))
-    assert a == b
+    for via in ("slab", "linear"):
+        a = set(map(tuple, ri.search(toks, via=via)
+                    .select("conv_id", "turn_idx")
+                    .toPandas().itertuples(index=False)))
+        b = set(map(tuple, rf.search(toks, via=via)
+                    .select("conv_id", "turn_idx")
+                    .toPandas().itertuples(index=False)))
+        assert a == b, via
     # old AND new conversations are both visible through the grown index
     assert any(c.startswith("x") for c, _ in a)
     assert any(not c.startswith("x") for c, _ in a)
