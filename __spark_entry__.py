@@ -1759,15 +1759,21 @@ def q70_ivf_trained_topk(spark, sf_dir):
     probe = np.asarray(
         emb.where(F.col("vec_id") == 0).select("embedding").head()[0],
         dtype=np.float64)
-    key = hashlib.md5(f"{sf_dir}:ivftrained:8:3".encode()).hexdigest()[:12]
+    nlist, iters = 8, 3
+    # keyed by the fixture's bytes too: a changed embeddings table
+    # retrains instead of serving a stale codebook
+    with open(f"{sf_dir}/embeddings.parquet", "rb") as f:
+        token = hashlib.md5(f.read()).hexdigest()[:12]
+    key = hashlib.md5(f"{sf_dir}:ivftrained:{nlist}:{iters}:{token}"
+                      .encode()).hexdigest()[:12]
     path = os.path.join(_CACHE_ROOT, f"ivf_tr_idx_{key}")
     try:
         idx = IvfFlatIndex(spark, path)
     except (OSError, ValueError, KeyError):
         shutil.rmtree(path, ignore_errors=True)
         rest = emb.where(F.col("vec_id") != 0)
-        cents = ivf_train_centroids(rest, 8, iters=3)
-        idx = IvfFlatIndex.build(rest, path, nlist=8, centroids=cents)
+        cents = ivf_train_centroids(rest, nlist, iters=iters)
+        idx = IvfFlatIndex.build(rest, path, nlist=nlist, centroids=cents)
     return (idx.topk(probe, k=10, nprobe=2).select("vec_id")
             .orderBy("vec_id"))
 
@@ -1864,7 +1870,24 @@ def q72_socket_storage_search(spark, sf_dir):
             .orderBy("doc_id"))
 
 
-_Q73_SRC = os.path.join(_CACHE_ROOT, "q73_latedata", "src")
+# q73's staged fixture: rows of (event_type, minutes past the anchor,
+# stage) for each availableNow run, and the (window, watermark) pair.
+# Their content token names the cache dir, so a changed fixture stages a
+# fresh source and sink instead of serving a stale sink. Run 1 advances
+# the watermark to 10:35 - 10min = 10:25, closing 10:00-10:10. In run 2,
+# D@10:02 is beyond the watermark (window end 10:10 <= 10:25 -> dropped);
+# L@10:28's window (10:20-10:30) is still open -> counted; C@11:00
+# counts; F@11:55 advances the final watermark to 11:45 but its own
+# window stays open.
+_Q73_BASE = 1767261600  # 2026-01-01T10:00:00Z — fixture anchor
+_Q73_WINDOW = ("10 minutes", "10 minutes")
+_Q73_STAGES = (
+    (("A", 0, 1), ("A", 5, 1), ("B", 30, 1), ("B", 35, 1)),
+    (("D", 2, 2), ("L", 28, 2), ("C", 60, 2), ("F", 115, 2)),
+)
+_Q73_TOKEN = hashlib.md5(repr((_Q73_BASE, _Q73_WINDOW, _Q73_STAGES))
+                         .encode()).hexdigest()[:12]
+_Q73_SRC = os.path.join(_CACHE_ROOT, f"q73_latedata_{_Q73_TOKEN}", "src")
 
 
 def q73_watermark_late_data(spark, sf_dir):
@@ -1882,7 +1905,6 @@ def q73_watermark_late_data(spark, sf_dir):
     watermark. Fixture times sit well away from boundary equality, so
     <=-vs-< eviction conventions cannot flip a row."""
     from mdbloom.spark.streaming import windowed_counts
-    base = 1767261600  # 2026-01-01T10:00:00Z — fixture anchor
     root = os.path.dirname(_Q73_SRC)
     sink = os.path.join(root, "sink")
     ckpt = os.path.join(root, "ckpt")
@@ -1891,11 +1913,11 @@ def q73_watermark_late_data(spark, sf_dir):
         shutil.rmtree(root, ignore_errors=True)
         os.makedirs(_Q73_SRC, exist_ok=True)
 
-        def stage(n, rows):
+        def stage(rows):
             (spark.createDataFrame(
                 rows, "event_type string, minutes int, stage int")
              .select("event_type",
-                     F.timestamp_seconds(F.lit(base)
+                     F.timestamp_seconds(F.lit(_Q73_BASE)
                                          + F.col("minutes") * 60)
                      .alias("ts"), "stage")
              .coalesce(1).write.mode("append").parquet(_Q73_SRC))
@@ -1906,9 +1928,9 @@ def q73_watermark_late_data(spark, sf_dir):
                       .schema("event_type string, ts timestamp, "
                               "stage int")
                       .parquet(_Q73_SRC))
+            window, watermark = _Q73_WINDOW
             agg = windowed_counts(stream, "ts", "event_type",
-                                  window="10 minutes",
-                                  watermark="10 minutes")
+                                  window=window, watermark=watermark)
             q = (agg.writeStream.outputMode("append").format("parquet")
                  .option("path", sink)
                  .option("checkpointLocation", ckpt)
@@ -1918,17 +1940,9 @@ def q73_watermark_late_data(spark, sf_dir):
                 q.stop()
                 raise TimeoutError("q73 streaming run stalled")
 
-        # run 1: watermark advances to 10:35 - 10min = 10:25; the
-        # 10:00-10:10 window closes and emits
-        stage(1, [("A", 0, 1), ("A", 5, 1), ("B", 30, 1), ("B", 35, 1)])
-        run_once()
-        # run 2: D@10:02 is beyond the watermark (window end 10:10 <=
-        # 10:25 -> dropped); L@10:28's window (10:20-10:30) is still
-        # open -> counted; C@11:00 counts; F@11:55 advances the final
-        # watermark to 11:45 but its own window stays open
-        stage(2, [("D", 2, 2), ("L", 28, 2), ("C", 60, 2),
-                  ("F", 115, 2)])
-        run_once()
+        for rows in _Q73_STAGES:
+            stage(rows)
+            run_once()
         with open(done, "w") as f:
             f.write("ok")
     out = spark.read.parquet(sink)

@@ -148,7 +148,19 @@ class ParquetStorage(StorageBackend):
     """Default: shard-partitioned parquet under ``<path>/storage`` with a
     parquet bloom filter on the content key — exact-get (key equality)
     prunes row groups without reading them, the file-format face of the
-    reference's O(1) content-addressed get."""
+    reference's O(1) content-addressed get.
+
+    The filter is sized per column chunk from the keys it holds. The
+    adaptive writer holds 12 power-of-two candidates, from the 1 MiB
+    ``parquet.bloom.filter.max.bytes`` cap down to 512 B, and writes the
+    smallest that meets the default 1% fpp for the chunk's distinct
+    keys (parquet sizes candidates in 500-key steps, so the smallest
+    written is 1 KiB; ~1,250 keys get 2 KiB). A fixed-size filter is
+    always 1 MiB, about 10x a 1k-key file's column data. The sizing is
+    parquet-internal (readers take the bitset size from the file), so
+    it needs no ``FORMAT_VERSION`` bump. The adaptive switch is read
+    only under its global key; parquet 1.16 ignores
+    ``parquet.bloom.filter.adaptive.enabled#key``."""
 
     name = "parquet"
 
@@ -159,6 +171,8 @@ class ParquetStorage(StorageBackend):
         (df.write.mode("overwrite").partitionBy("shard")
          .option("partitionOverwriteMode", "dynamic")
          .option("parquet.bloom.filter.enabled#key", "true")
+         .option("parquet.bloom.filter.adaptive.enabled", "true")
+         .option("parquet.bloom.filter.candidates.number#key", "12")
          .parquet(self._dir(path)))
 
     def read(self, spark: SparkSession, path: str) -> DataFrame:

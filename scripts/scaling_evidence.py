@@ -6,7 +6,8 @@
       NumPy scatter the slab kernels use,
   (c) a register-only Spark codegen job         — xxhash64 fold over
       spark.range (the JVM analogue of (a)),
-  (d) the engine's build stages (profile_stages WORKER),
+  (d) the engine's build stages (STAGES_CHILD: each build stage timed
+      separately on the identical input),
 
 each at N and 4N parallelism. If (b) scales far below 0.8 in the same
 window where (a)/(c) scale well, any engine stage that streams memory
@@ -111,14 +112,88 @@ def spark_cpu(cores: int) -> float:
     raise RuntimeError(out.stderr[-2000:])
 
 
+# (d) one build stage at a time, mirroring build()'s fused flow; prints
+# one RESULT line of per-stage seconds
+STAGES_CHILD = r"""
+import json, os, shutil, sys, time
+sys.path.insert(0, ".")
+from pyspark.sql import functions as F
+from mdbloom.spark.build import BloomIndexWriter, IndexConfig
+from mdbloom.spark.session import get_spark
+from mdbloom.spark.transcripts import synthesize_transcripts
+
+cores = int(sys.argv[1]); n_turns = int(sys.argv[2])
+spark = get_spark(f"stages{cores}", master=f"local[{cores}]",
+                  shuffle_partitions=cores)
+idx = f"/tmp/mdbloom_prof_{cores}"
+# keyed by size: a cached corpus from a different-n run must
+# never be silently reused (same rule as scaling_bench)
+src = f"/tmp/mdbloom_prof_src_{n_turns}"
+shutil.rmtree(idx, ignore_errors=True)
+os.makedirs(idx, exist_ok=True)
+# 256 shards: match the scaling_bench protocol layout so stage timings
+# attribute the same end-to-end build the N-vs-4N pairs measure
+cfg = IndexConfig(n_per_record=40, probability=1e-3, n_shards=256,
+                  chunk_slots=65536)
+if not os.path.exists(src + "/_SUCCESS"):
+    synthesize_transcripts(spark, n_turns, seed=42, n_partitions=128) \
+        .write.mode("overwrite").parquet(src)
+tdf = spark.read.parquet(src)
+w = BloomIndexWriter(spark, cfg)
+stages = {}
+
+def t(name, fn):
+    t0 = time.monotonic(); r = fn(); stages[name] = time.monotonic() - t0
+    return r
+
+fp = t("fingerprints_toPandas", lambda: w.fingerprints(tdf).toPandas())
+# mirror build()'s fused v2 flow: the jvm backend repartitions internally
+# (its wide exchange happens pre-aggregation on raw records); the hash
+# pass streams straight into the partitioned storage write (no persist)
+filters = w.filters_df(tdf)
+if cfg.hash_backend != "jvm":
+    filters = filters.repartition(cfg.n_shards, "shard")
+t("hash_storage_write", lambda: w._storage().write(
+    filters.select("shard", "key", *cfg.id_columns, "filter"), idx))
+from mdbloom.spark.build import SLAB_SCHEMA, MANIFEST_SCHEMA
+stored = spark.read.parquet(os.path.join(idx, "storage")) \
+    .select("shard", "key", "filter")
+t("slab_write", lambda: (stored
+    .mapInPandas(w._slab_mapper(), schema=SLAB_SCHEMA)
+    .write.mode("overwrite").partitionBy("shard")
+    .parquet(os.path.join(idx, "slabs"))))
+t("token_stream", lambda: w._write_token_hashes(
+    w._token_stream_df(tdf), idx))
+t("token_gate", lambda: w.token_gate_df(
+    spark.read.parquet(os.path.join(idx, "token_hashes"))).count())
+slabs_rd = spark.read.parquet(os.path.join(idx, "slabs"))
+t("manifest_agg", lambda: (slabs_rd.groupBy("shard")
+    .applyInPandas(w._manifest_udf(), schema=MANIFEST_SCHEMA).count()))
+stages["total"] = sum(stages.values())
+print("RESULT " + json.dumps({"cores": cores, "stages": stages}))
+"""
+
+
+def treatment_env() -> dict:
+    """Fault-path mitigation env (same as scaling_bench.run): pre-touched
+    JVM heap + reusable malloc/Arrow arenas, see BENCH.md."""
+    env = dict(os.environ)
+    if os.environ.get("MDBLOOM_SCALE_PRETOUCH", "1") == "1":
+        env.update({
+            "MDBLOOM_JVM_PRETOUCH": "1",
+            "MALLOC_MMAP_THRESHOLD_": "17179869184",
+            "MALLOC_TRIM_THRESHOLD_": "17179869184",
+            "ARROW_DEFAULT_MEMORY_POOL": "system",
+        })
+    return env
+
+
 def canary_ms() -> float:
     from scripts.scaling_bench import canary_ms as c
     return c()
 
 
 def main():
-    from scripts.profile_stages import WORKER, treatment_env
-
     report: dict = {"n_low": N_LOW, "n_high": N_HIGH, "reps": N_REPS,
                     "canary_start_ms": round(canary_ms(), 1)}
     cpu = {N_LOW: [], N_HIGH: []}      # throughputs (higher better)
@@ -130,7 +205,7 @@ def main():
     def stage_run(cores: int) -> dict:
         out = subprocess.run(
             ["taskset", "-c", f"0-{cores - 1}", sys.executable, "-c",
-             WORKER, str(cores), str(N_TURNS)],
+             STAGES_CHILD, str(cores), str(N_TURNS)],
             capture_output=True, text=True, env=treatment_env(), cwd=REPO)
         for line in out.stdout.splitlines():
             if line.startswith("RESULT "):
@@ -175,7 +250,7 @@ def main():
         N_LOW: [round(x, 1) for x in sc[N_LOW]],
         N_HIGH: [round(x, 1) for x in sc[N_HIGH]]}
 
-    # (d) engine build stages at both levels (reuses profile_stages)
+    # (d) engine build stages at both levels
     # presence-checked (not truthiness): a stage measured at 0.0 s, or
     # absent from rep 0 only, must not silently vanish from the report
     best = {}

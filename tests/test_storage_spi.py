@@ -224,3 +224,75 @@ def test_backend_switch_clears_old_backend(spark, small_df, n_rows,
     BloomIndexWriter(spark, parquet_cfg).build(small_df, p)
     assert os.path.abspath(p) not in _MEMORY_STORES
     assert BloomIndexReader(spark, p).storage().count() == n_rows
+
+
+def _key_filters(spark, path):
+    """One ``(file, n_keys, bitset_bytes, all_keys_positive)`` per
+    ``key`` column chunk of every ``storage/`` parquet file, read through
+    parquet-mr's own ``ParquetFileReader.readBloomFilter`` — the filter
+    the exact-get row-group pruning consults."""
+    import glob
+    import os
+    jvm = spark._jvm
+    pq = jvm.org.apache.parquet
+    conf = spark._jsc.hadoopConfiguration()
+    out = []
+    for f in sorted(glob.glob(os.path.join(path, "storage", "shard=*",
+                                           "*.parquet"))):
+        keys = [r[0] for r in spark.read.parquet(f).select("key").collect()]
+        reader = pq.hadoop.ParquetFileReader.open(
+            pq.hadoop.util.HadoopInputFile.fromPath(
+                jvm.org.apache.hadoop.fs.Path(f), conf))
+        try:
+            for block in reader.getFooter().getBlocks():
+                for col in block.getColumns():
+                    if col.getPath().toDotString() != "key":
+                        continue
+                    bf = reader.readBloomFilter(col)
+                    assert bf is not None, f"no key bloom filter in {f}"
+                    hit = all(bf.findHash(bf.hash(
+                        pq.io.api.Binary.fromString(k))) for k in keys)
+                    out.append((f, int(col.getValueCount()),
+                                int(bf.getBitsetSize()), hit))
+        finally:
+            reader.close()
+    assert out, f"no storage files under {path}"
+    return out
+
+
+def test_parquet_key_filter_sized_to_each_file(spark, small_df, tmp_path):
+    """The content-key bloom filter stays on (exact get/get_many prune
+    row groups by it) and is sized from each file's own keys, not at
+    parquet's fixed 1 MiB, on every write path into storage/: a full
+    build, a resume that rebuilds one shard, and compact_artifacts.
+
+    Bound: parquet's adaptive writer keeps the smallest power-of-two
+    candidate whose expected key count covers the chunk, and it derives
+    that count in steps of 500 keys. So the bitset is at most twice the
+    1%-fpp optimum for ``n + 500`` keys (at ~1,250 keys a file it is
+    2,048 B, within twice the optimum for ``n`` itself)."""
+    from pyspark.sql import functions as F
+    bits = (spark._jvm.org.apache.parquet.column.values.bloomfilter
+            .BlockSplitBloomFilter.optimalNumOfBits)
+    cfg = IndexConfig(n_per_record=40, probability=1e-3, n_shards=2,
+                      chunk_slots=256)
+    p = str(tmp_path / "idx")
+    w = BloomIndexWriter(spark, cfg)
+
+    def check():
+        for f, n, size, hit in _key_filters(spark, p):
+            assert hit, f"a stored key tests negative in {f}"
+            assert size <= 2 * bits(n + 500, 0.01) // 8, (f, n, size)
+
+    w.build(small_df, p)
+    check()
+    drop = small_df.select("conv_id").orderBy("conv_id").first()[0]
+    stats = w.build(small_df.where(F.col("conv_id") != drop), p,
+                    resume=True)
+    assert stats["built"] == 1
+    check()
+    # rows still in the index (the first conversation was dropped above)
+    w.remove(small_df.orderBy(F.desc("conv_id")).limit(5)
+             .select("conv_id", "turn_idx"), p)
+    assert w.compact_artifacts(p)["built"] >= 1
+    check()
