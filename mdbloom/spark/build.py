@@ -1346,24 +1346,13 @@ class BloomIndexWriter:
         values to remove. Returns rows tombstoned."""
         from mdbloom.spark.query import BloomIndexReader
         cfg = self.cfg
-        reader = BloomIndexReader(self.spark, path)
-        if reader._jvm_hasher is not None:
-            key = reader._jvm_hasher.content_key(list(tokens), reader.shape)
-            qbits = reader._jvm_hasher.positions(list(tokens), reader.shape)
-        else:
-            filt = reader._cache.filter_for(list(tokens))
-            key = B.content_key(filt)
-            qbits = np.flatnonzero(
-                B.unpack(filt, reader.shape.m)).astype(np.int64)
-        # gate short-circuit (`ContainerImpl.java:138`): definite miss ->
-        # no-op without touching storage
-        if not reader.prune_shards(qbits, tokens):
-            return 0
         ids = values_df.select(*cfg.id_columns).dropDuplicates(
             list(cfg.id_columns))
-        # live view -> idempotent; absent value = no-op (InMemory.java:49-67)
-        storage = reader.storage()
-        doomed = (storage.where(F.col("key") == key)
+        # reader.get: the live key-equality view, planned like every read
+        # — a definite miss (gate short-circuit, `ContainerImpl.java:138`)
+        # plans to an empty relation, so no storage row is scanned; live
+        # view -> idempotent; absent value = no-op (InMemory.java:49-67)
+        doomed = (BloomIndexReader(self.spark, path).get(tokens)
                   .join(ids, list(cfg.id_columns), "left_semi")
                   .select("shard", "key", *cfg.id_columns)
                   .dropDuplicates(["shard", "key", *cfg.id_columns]))

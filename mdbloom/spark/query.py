@@ -6,13 +6,20 @@ Reference semantics (SURVEY §3.2-3.3):
   * ``get`` — bit-for-bit exact match; content addressing makes it a key
     equality lookup (`RangePacked.java:131-135`).
 
-Query plan:
-  1. query tokens -> bit positions (driver-side NumPy, same md5 + enhanced
-     double hashing as the build);
+Query plan (steps 1-2 are ONE planner, ``BloomIndexReader._plan``, shared
+by every search/get surface):
+  1. query tokens -> bit positions, driver-side, with the hash backend the
+     index was built with (config.json: jvm = xxhash64 mirror, python =
+     md5; both enhanced double hashing), every token of a batch in one
+     pass;
   2. **gate/summary pruning** (reference gate short-circuit,
-     `ContainerImpl.java:171`): the manifest (one small row per shard) is
-     collected once; shards whose OR-summary lacks any query bit are never
-     scanned — the distributed analogue of the Bloofi tree descent;
+     `ContainerImpl.java:171`): shards whose OR-summary lacks a query bit
+     or whose token gate lacks a query token are never scanned. Two
+     regimes: up to ``DRIVER_PRUNE_MAX_SHARDS`` manifest rows the manifest
+     (one small row per shard) is collected once and pruned driver-side;
+     past it, one distributed pass over the manifest parquet, after the
+     manifest-tree descent (the Bloofi inner-node descent,
+     `InnerNode.java:118-133`), prunes the whole batch;
   3. **slab scan** (`mapInPandas` over surviving slab chunks): AND the k
      query-bit rows per chunk, emit (shard, slot) hits
      (`FlatBloofi.java:188-205` word-parallel AND, whole chunks at a time);
@@ -334,6 +341,13 @@ class BloomIndexReader:
             return self._jvm_hasher.positions(list(tokens), self.shape)
         return self._cache.bit_positions_for(list(tokens))
 
+    def _content_key(self, tokens) -> str:
+        """Content key of the query's filter — what :meth:`get` matches
+        stored keys against (`ContainerImpl.java:111-122`)."""
+        if self._jvm_hasher is not None:
+            return self._jvm_hasher.content_key(list(tokens), self.shape)
+        return B.content_key(self._cache.filter_for(list(tokens)))
+
     def _gate_filter(self, tokens) -> np.ndarray:
         if self._jvm_hasher is not None:
             return self._jvm_hasher.packed_filter(list(tokens),
@@ -521,8 +535,9 @@ class BloomIndexReader:
         return surv
 
     #: sentinel returned by :meth:`prune_shards_many_distributed` for a
-    #: query whose surviving-shard list exceeded ``max_shards_per_query``:
-    #: "no shard restriction" — scan every shard for this query. The
+    #: query whose surviving-shard list exceeded ``max_shards_per_query``
+    #: (and by :meth:`_plan` also for match-all and survive-everywhere
+    #: queries): "no shard restriction" — scan every shard. The
     #: same convention as the slab-SQL plan structs' empty ``sh`` array
     #: (sound superset: extra shards never change results, the slab scan
     #: re-checks every bit).
@@ -677,10 +692,9 @@ class BloomIndexReader:
     def search_keys(self, tokens) -> DataFrame:
         """Containment search -> DataFrame (shard, slot, key) of candidate
         index entries."""
-        qbits = self.query_bits(tokens)
-        shards = self._prune_single(qbits, tokens)
+        qbits, shards = self._plan({"q": list(tokens)})["q"]
         slotmap = self.slotmap()
-        if shards is not self.ALL_SHARDS and not shards:
+        if not shards:
             return slotmap.where(F.lit(False))
         if qbits.size == 0:
             # empty query matches everything (ContainerImpl.java:159-169)
@@ -719,7 +733,7 @@ class BloomIndexReader:
         # so there is no fallback path.
         return slabs.mapInPandas(scan, schema=HIT_SCHEMA + ", key string")
 
-    #: manifest row count above which batched planning switches from the
+    #: manifest row count above which :meth:`_plan` switches from the
     #: driver-matrix prune loop to the DISTRIBUTED planner
     #: (:meth:`prune_shards_many_distributed`) — past this, the manifest
     #: is a table to scan in parallel, not a NumPy array to hold on the
@@ -743,21 +757,48 @@ class BloomIndexReader:
                                                 "*.parquet")))
         return self._n_manifest_rows
 
-    def _prune_single(self, qbits, tokens):
-        """Shard candidates for ONE query under the same planner-regime
-        switch as :meth:`_plan_query_batch`: driver-matrix prune loop
-        up to :data:`DRIVER_PRUNE_MAX_SHARDS` manifest rows, one
-        distributed planning pass past it. Returns a shard list, an
-        empty list for a definite miss, or :data:`ALL_SHARDS` (scan
-        unpruned — over-cap survivors or a match-all query at huge
-        scale, where materializing 'every shard' as a list is exactly
-        the driver-memory cross product the cap exists to avoid)."""
-        if self._manifest_row_count() <= self.DRIVER_PRUNE_MAX_SHARDS:
-            return self.prune_shards(qbits, tokens)
-        if qbits.size == 0:
-            return self.ALL_SHARDS  # empty query matches everything
-        got = self.prune_shards_many_distributed({"q": list(tokens)})["q"]
-        return got
+    def _plan(self, queries: dict) -> dict:
+        """The shard planner behind EVERY planned read surface (search,
+        get, their batched forms, and remove_exact through get):
+        ``{name: [tokens...]}`` -> ``{name: (qbits, shards)}``.
+
+        Every token of the batch is hashed in ONE pass, then the
+        planner regime is picked once per batch (VERDICT r4 item 4): up
+        to :data:`DRIVER_PRUNE_MAX_SHARDS` manifest rows the
+        driver-matrix prune loop (:meth:`prune_shards`, O(ms), zero
+        jobs); past it, ONE distributed planning pass
+        (:meth:`prune_shards_many_distributed`) with bounded driver
+        memory. ``shards`` has one encoding in both regimes:
+
+        * :data:`ALL_SHARDS` — scan without a shard restriction: a
+          match-all empty query (``qbits.size == 0``,
+          `ContainerImpl.java:159-169`), a query surviving in every
+          manifest shard, or over-cap survivors;
+        * a sorted shard list — scan only these; empty for a definite
+          miss (the gate short-circuit, `ContainerImpl.java:115,171`).
+
+        One planner keeps the strategies' pruning — and therefore their
+        bit-identity contract — impossible to desynchronize."""
+        if self._jvm_hasher is not None:
+            self._jvm_hasher._ensure(
+                {t for toks in queries.values() for t in toks})
+        qbits = {name: self.query_bits(toks)
+                 for name, toks in queries.items()}
+        todo = {name: list(toks) for name, toks in queries.items()
+                if qbits[name].size}
+        n = self._manifest_row_count()
+        if n > self.DRIVER_PRUNE_MAX_SHARDS:
+            pruned = self.prune_shards_many_distributed(todo) if todo else {}
+        else:
+            pruned = {name: self.prune_shards(qbits[name], toks)
+                      for name, toks in todo.items()}
+        out = {}
+        for name, qb in qbits.items():
+            shards = pruned.get(name, self.ALL_SHARDS)  # absent: match-all
+            if shards is not self.ALL_SHARDS and 0 < len(shards) == n:
+                shards = self.ALL_SHARDS
+            out[name] = (qb, shards)
+        return out
 
     def _where_shards(self, df: DataFrame, shards) -> DataFrame:
         """Apply a shard restriction unless it is the no-restriction
@@ -767,52 +808,27 @@ class BloomIndexReader:
         return df.where(F.col("shard").isin(
             [int(s) for s in shards]))
 
-    def _plan_query_batch(self, queries: dict):
-        """Shared batched-query planning for EVERY batched strategy
-        (NumPy slab, linear, slab-SQL): hash all tokens in ONE job, then
-        per query yield ``(name, qbits, shards)`` where ``qbits.size == 0``
-        marks match-all (empty query, `ContainerImpl.java:159-169`),
-        ``shards is None`` marks pruned-to-zero (definite miss), and
-        ``shards is ALL_SHARDS`` marks no-restriction (scan unpruned).
-        One definition keeps the three strategies' planning — and
-        therefore their bit-identity contract — impossible to
-        desynchronize.
+    def _union_shards(self, shard_sets):
+        """One scan restriction covering several plans' shard sets:
+        :data:`ALL_SHARDS` if any plan is unrestricted, else the sorted
+        union."""
+        union: set[int] = set()
+        for shards in shard_sets:
+            if shards is self.ALL_SHARDS:
+                return self.ALL_SHARDS
+            union.update(shards)
+        return sorted(union)
 
-        Planner selection (VERDICT r4 item 4, closing the loop): up to
-        :data:`DRIVER_PRUNE_MAX_SHARDS` manifest rows the driver-matrix
-        prune loop runs (O(ms), zero jobs); past it, ONE distributed
-        planning pass (:meth:`prune_shards_many_distributed`) prunes
-        every query with bounded driver memory, and over-cap survivor
-        lists degrade to ALL_SHARDS — which every consumer compresses
-        to its no-restriction plan form instead of materializing Q×S
-        shard lists."""
-        if self._jvm_hasher is not None:
-            # ONE tiny hash job for every token of every query — per-query
-            # planning jobs would dominate batched-search latency
-            self._jvm_hasher._ensure(
-                {t for toks in queries.values() for t in toks})
-        if self._manifest_row_count() > self.DRIVER_PRUNE_MAX_SHARDS:
-            pruned = self.prune_shards_many_distributed(queries)
-            out = []
-            for name, toks in queries.items():
-                qbits = self.query_bits(toks)
-                if qbits.size == 0:
-                    out.append((name, qbits, []))
-                    continue
-                sh = pruned[name]
-                if sh is self.ALL_SHARDS:
-                    out.append((name, qbits, self.ALL_SHARDS))
-                else:
-                    out.append((name, qbits, list(sh) if sh else None))
-            return out
-        out = []
-        for name, toks in queries.items():
-            qbits = self.query_bits(toks)
-            if qbits.size == 0:
-                out.append((name, qbits, []))
-                continue
-            shards = self.prune_shards(qbits, toks)
-            out.append((name, qbits, list(shards) if shards else None))
+    def _match_all_keys(self, names: list) -> DataFrame:
+        """(query, shard, slot, key) for match-all (empty) queries: every
+        slot, once per name — answered from the slotmap, never the slab
+        kernel (`ContainerImpl.java:159-169`)."""
+        slotmap = self.slotmap()
+        out = (slotmap.where(F.lit(False)).withColumn("query", F.lit(""))
+               .select("query", "shard", "slot", "key"))
+        for name in names:
+            out = out.unionByName(slotmap.withColumn("query", F.lit(name))
+                                  .select("query", "shard", "slot", "key"))
         return out
 
     def search_keys_many(self, queries: dict) -> DataFrame:
@@ -825,27 +841,12 @@ class BloomIndexReader:
         pruning still applies inside the scan via a broadcast plan."""
         plans = {}
         match_all: list[str] = []
-        all_shards: set[int] = set()
-        for name, qbits, shards in self._plan_query_batch(queries):
+        for name, (qbits, shards) in self._plan(queries).items():
             if qbits.size == 0:
                 match_all.append(name)  # empty query matches everything
-                continue
-            if shards is None:
-                continue  # pruned to zero shards: definite miss
-            if shards is self.ALL_SHARDS:
-                plans[name] = (qbits.tolist(), self.ALL_SHARDS)
-                continue
-            plans[name] = (qbits.tolist(), set(shards))
-            all_shards.update(shards)
-        slotmap = self.slotmap()
-        empty = (slotmap.where(F.lit(False))
-                 .withColumn("query", F.lit(""))
-                 .select("query", "shard", "slot", "key"))
-        all_part = empty
-        for name in match_all:
-            all_part = all_part.unionByName(
-                slotmap.withColumn("query", F.lit(name))
-                .select("query", "shard", "slot", "key"))
+            elif shards:  # else pruned to zero shards: definite miss
+                plans[name] = (qbits.tolist(), shards)
+        all_part = self._match_all_keys(match_all)
         if not plans:
             return all_part
         m = self.shape.m
@@ -859,16 +860,11 @@ class BloomIndexReader:
         # O(pruned pairs + global queries), never the Q×S cross product
         # (VERDICT r4 item 4 — same compression the slab-SQL strategy's
         # empty-``sh`` plan structs use).
-        n_shards_total = len(self._prune_matrices()[0]) \
-            if self._manifest_row_count() <= self.DRIVER_PRUNE_MAX_SHARDS \
-            else -1  # huge manifest: never load driver matrices here
         global_entries: list[tuple] = []
         shard_entries: dict[int, list] = {}
-        unpruned = False
         for name, (qb, shards) in plans.items():
-            if shards is self.ALL_SHARDS or len(shards) == n_shards_total:
+            if shards is self.ALL_SHARDS:
                 global_entries.append((name, qb))
-                unpruned = True
             else:
                 for s in shards:
                     shard_entries.setdefault(s, []).append((name, qb))
@@ -882,9 +878,8 @@ class BloomIndexReader:
 
         shard_plans = {s: _pack(e) for s, e in shard_entries.items()}
         global_plan = _pack(global_entries) if global_entries else None
-        slabs = self.slabs()
-        if not unpruned:
-            slabs = slabs.where(F.col("shard").isin(sorted(all_shards)))
+        slabs = self._where_shards(
+            self.slabs(), self._union_shards(sh for _, sh in plans.values()))
 
         def scan(iterator):
             def _arr(p):
@@ -1012,21 +1007,18 @@ class BloomIndexReader:
         implementation for cross-checking results (strategy-equivalence
         test at Spark scale). Same driver-side gate pruning as
         :meth:`search`; same output rows."""
-        qbits = self.query_bits(tokens)
+        qbits, shards = self._plan({"q": list(tokens)})["q"]
         df = self.storage(keep_filter=True)
-        if qbits.size == 0:
-            return df.drop("filter")  # empty query matches everything
-        shards = self._prune_single(qbits, tokens)
-        if shards is not self.ALL_SHARDS and not shards:
+        if not shards:
             return df.where(F.lit(False)).drop("filter")
         qwords = B.from_bits(qbits, self.shape.m).view(np.int64)
-        cond = F.lit(True) if shards is self.ALL_SHARDS \
-            else F.col("shard").isin([int(s) for s in shards])
+        # empty query: no word predicate, so every row matches
+        cond = F.lit(True)
         for w in np.flatnonzero(qwords != 0):
             mask = int(qwords[w])
             cond = cond & (F.element_at("filter", int(w) + 1)
                            .bitwiseAND(F.lit(mask)) == F.lit(mask))
-        return df.where(cond).drop("filter")
+        return self._where_shards(df, shards).where(cond).drop("filter")
 
     def search_linear_many(self, queries: dict) -> DataFrame:
         """Batched distributed Linear (I1): ``{name: [tokens...]}`` ->
@@ -1076,30 +1068,17 @@ class BloomIndexReader:
         match everything (`ContainerImpl.java:159-169`): an empty pair
         list makes ``forall`` vacuously true."""
         m = self.shape.m
-        n_shards_total = len(self._prune_matrices()[0]) \
-            if self._manifest_row_count() <= self.DRIVER_PRUNE_MAX_SHARDS \
-            else -1  # huge manifest: never load driver matrices here
         plans: list[tuple[str, list[tuple[int, int]], list[int]]] = []
-        all_shards: set[int] = set()
-        any_unrestricted = False
-        for name, qbits, shards in self._plan_query_batch(queries):
-            if qbits.size == 0:
-                plans.append((name, [], []))  # matches every row
-                any_unrestricted = True
-                continue
-            if shards is None:
+        for name, (qbits, shards) in self._plan(queries).items():
+            if not shards:
                 continue  # pruned to zero shards: definite miss
+            # an empty pair list (match-all) makes forall vacuously true
             qwords = B.from_bits(qbits, m).view(np.int64)
             pairs = [(int(w) + 1, int(qwords[w]))
                      for w in np.flatnonzero(qwords != 0)]
-            # [] = kept every shard = no per-query restriction needed
-            if shards is self.ALL_SHARDS or len(shards) == n_shards_total:
-                sh: list[int] = []
-                any_unrestricted = True
-            else:
-                sh = list(shards)
-                all_shards.update(shards)
-            plans.append((name, pairs, sh))
+            # [] = no per-query shard restriction
+            plans.append((name, pairs,
+                          [] if shards is self.ALL_SHARDS else shards))
         df = self.storage(keep_filter=True)
         out_cols = [c for c in df.columns if c != "filter"]
         if not plans:
@@ -1108,8 +1087,8 @@ class BloomIndexReader:
             return (df.where(F.lit(False))
                     .withColumn("query", F.lit(""))
                     .select("query", *out_cols))
-        if not any_unrestricted:
-            df = df.where(F.col("shard").isin(sorted(all_shards)))
+        df = self._where_shards(df, self._union_shards(
+            sh or self.ALL_SHARDS for _, _, sh in plans))
         n_preds = sum(len(p) for _, p, _ in plans)
         if n_preds > SQL_LITERAL_MAX_PREDS:
             # plans-as-data broadcast join: O(1) plan size at any Q
@@ -1215,40 +1194,20 @@ class BloomIndexReader:
         a plans-as-data broadcast join above ``SQL_LITERAL_MAX_PREDS``
         total query bits."""
         m = self.shape.m
-        n_shards_total = len(self._prune_matrices()[0]) \
-            if self._manifest_row_count() <= self.DRIVER_PRUNE_MAX_SHARDS \
-            else -1  # huge manifest: never load driver matrices here
         plans: list[tuple[str, list[int], list[int]]] = []
         match_all: list[str] = []
-        all_shards: set[int] = set()
-        any_unrestricted = False
-        for name, qbits, shards in self._plan_query_batch(queries):
+        for name, (qbits, shards) in self._plan(queries).items():
             if qbits.size == 0:
                 match_all.append(name)
-                continue
-            if shards is None:
-                continue  # pruned to zero shards: definite miss
-            if shards is self.ALL_SHARDS or len(shards) == n_shards_total:
-                sh: list[int] = []  # empty sh = no shard restriction
-                any_unrestricted = True
-            else:
-                sh = list(shards)
-                all_shards.update(shards)
-            plans.append((name, [int(b) for b in qbits], sh))
-        slotmap = self.slotmap()
-        empty = (slotmap.where(F.lit(False))
-                 .withColumn("query", F.lit(""))
-                 .select("query", "shard", "slot", "key"))
-        all_part = empty
-        for name in match_all:
-            all_part = all_part.unionByName(
-                slotmap.withColumn("query", F.lit(name))
-                .select("query", "shard", "slot", "key"))
+            elif shards:  # else pruned to zero shards: definite miss
+                # empty sh = no shard restriction
+                plans.append((name, [int(b) for b in qbits],
+                              [] if shards is self.ALL_SHARDS else shards))
+        all_part = self._match_all_keys(match_all)
         if not plans:
             return all_part
-        slabs = self.slabs()
-        if not any_unrestricted:
-            slabs = slabs.where(F.col("shard").isin(sorted(all_shards)))
+        slabs = self._where_shards(self.slabs(), self._union_shards(
+            sh or self.ALL_SHARDS for _, _, sh in plans))
         # per-row words-per-bit-row, hoisted for _slab_hits_sql;
         # CAST to int: `div` yields BIGINT, which would poison
         # sequence() elements and element_at() indices
@@ -1435,19 +1394,11 @@ class BloomIndexReader:
     def get(self, tokens) -> DataFrame:
         """Exact (bit-for-bit) match: content-addressed key equality
         (`ContainerImpl.java:111-122` via I6 'natural' index semantics)."""
-        if self._jvm_hasher is not None:
-            key = self._jvm_hasher.content_key(list(tokens), self.shape)
-            qbits = self._jvm_hasher.positions(list(tokens), self.shape)
-        else:
-            filt = self._cache.filter_for(list(tokens))
-            key = B.content_key(filt)
-            qbits = np.flatnonzero(
-                B.unpack(filt, self.shape.m)).astype(np.int64)
-        shards = self._prune_single(qbits, tokens)
-        if shards is not self.ALL_SHARDS and not shards:
+        shards = self._plan({"q": list(tokens)})["q"][1]
+        if not shards:
             return self.storage().where(F.lit(False))
         return self._where_shards(self.storage(), shards).where(
-            F.col("key") == key)
+            F.col("key") == self._content_key(tokens))
 
     def get_bitexact(self, tokens, via: str = "linear") -> DataFrame:
         """PHYSICAL exact-get variants — equality decided on the stored
@@ -1470,31 +1421,24 @@ class BloomIndexReader:
         asserted bit-identical in tests. An empty query filter falls
         back to the word-compare (all words zero) under either
         ``via``."""
-        m = self.shape.m
-        if self._jvm_hasher is not None:
-            qbits = self._jvm_hasher.positions(list(tokens), self.shape)
-        else:
-            qbits = np.flatnonzero(B.unpack(
-                self._cache.filter_for(list(tokens)), m)).astype(np.int64)
-        shards = self._prune_single(qbits, tokens)
-        if shards is not self.ALL_SHARDS and not shards:
+        qbits, shards = self._plan({"q": list(tokens)})["q"]
+        if not shards:
             return self.storage().where(F.lit(False))
         if via == "slab" and qbits.size:
-            keys = self._where_shards(
-                self.search_keys(tokens).select("shard", "key"), shards)
+            # search_keys plans and restricts to the same shards itself
+            keys = self.search_keys(tokens).select("shard", "key")
             cand = (self.storage(keep_filter=True)
                     .join(keys, ["shard", "key"], "left_semi"))
             popcnt = F.aggregate(
                 "filter", F.lit(0).cast("long"),
                 lambda a, w: a + F.bit_count(w))
             return cand.where(popcnt == int(qbits.size)).drop("filter")
-        qwords = B.from_bits(qbits, m).view(np.int64)
-        cond = F.lit(True) if shards is self.ALL_SHARDS \
-            else F.col("shard").isin([int(s) for s in shards])
+        qwords = B.from_bits(qbits, self.shape.m).view(np.int64)
+        cond = F.lit(True)
         for i in range(len(qwords)):
             cond = cond & (F.element_at("filter", i + 1)
                            == F.lit(int(qwords[i])))
-        return (self.storage(keep_filter=True)
+        return (self._where_shards(self.storage(keep_filter=True), shards)
                 .where(cond).drop("filter"))
 
     def get_many(self, queries: dict) -> DataFrame:
@@ -1506,49 +1450,21 @@ class BloomIndexReader:
         the storage table's key bloom filter + min/max stats); a tiny
         broadcast (query, key) map then tags the surviving rows — a key
         requested by several names returns a row per name."""
-        plans: list[tuple[str, str]] = []  # (name, content key)
-        all_shards: set[int] = set()
-        any_unrestricted = False
-        if self._jvm_hasher is not None:
-            self._jvm_hasher._ensure(
-                {t for toks in queries.values() for t in toks})
-        # huge-manifest regime: ONE distributed planning pass for the
-        # whole batch (per-query _prune_single would launch Q jobs)
-        batch_pruned = None
-        if self._manifest_row_count() > self.DRIVER_PRUNE_MAX_SHARDS:
-            batch_pruned = self.prune_shards_many_distributed(queries)
-        for name, toks in queries.items():
-            if self._jvm_hasher is not None:
-                key = self._jvm_hasher.content_key(list(toks), self.shape)
-                qbits = self._jvm_hasher.positions(list(toks), self.shape)
-            else:
-                filt = self._cache.filter_for(list(toks))
-                key = B.content_key(filt)
-                qbits = np.flatnonzero(
-                    B.unpack(filt, self.shape.m)).astype(np.int64)
-            if batch_pruned is not None:
-                shards = (self.ALL_SHARDS if qbits.size == 0
-                          else batch_pruned[name])
-            else:
-                shards = self.prune_shards(qbits, toks)
-            if shards is self.ALL_SHARDS:
-                any_unrestricted = True
-            elif not shards:
-                continue  # gate short-circuit (`ContainerImpl.java:115`)
-            else:
-                all_shards.update(shards)
-            plans.append((name, key))
+        # (name, content key, shards); a pruned-to-zero query is the gate
+        # short-circuit (`ContainerImpl.java:115`) and drops out here
+        plans = [(name, self._content_key(queries[name]), shards)
+                 for name, (_, shards) in self._plan(queries).items()
+                 if shards]
         storage = self.storage()
         if not plans:
             return (storage.where(F.lit(False))
                     .withColumn("query", F.lit(""))
                     .select("query", *storage.columns))
-        keys = sorted({k for _, k in plans})
-        hit = storage.where(F.col("key").isin(keys))
-        if not any_unrestricted:
-            hit = hit.where(F.col("shard").isin(sorted(all_shards)))
-        tag = self.spark.createDataFrame(plans, schema="query string, "
-                                                       "key string")
+        keys = sorted({k for _, k, _ in plans})
+        hit = self._where_shards(storage.where(F.col("key").isin(keys)),
+                                 self._union_shards(sh for *_, sh in plans))
+        tag = self.spark.createDataFrame([(n, k) for n, k, _ in plans],
+                                         schema="query string, key string")
         return (hit.join(F.broadcast(tag), "key", "inner")
                 .select("query", *storage.columns))
 

@@ -1,7 +1,9 @@
 """Run every queries() entry and diff against its oracle_sql() via DuckDB —
 the same comparison the grading driver makes (row count + schema + order-
 insensitive value hash), plus a numeric max-abs-diff report so float
-drift is visible before it becomes a hash mismatch.
+drift is visible before it becomes a hash mismatch. A ``warmup`` line (one
+trivial Spark job) prints first, so per-query times exclude executor
+start-up.
 
 Usage: python scripts/selfcheck.py [sf_dir] [query_name ...]
 """
@@ -50,6 +52,11 @@ def main():
     from mdbloom.spark.session import get_spark
 
     spark = get_spark("selfcheck", master="local[8]", shuffle_partitions=8)
+    # one trivial job first: executor start-up lands here, not in the
+    # first query's time
+    t0 = time.monotonic()
+    spark.range(1).count()
+    print(f"warmup: {time.monotonic() - t0:.1f}s")
     con = duckdb.connect()
     for t in TABLES:
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM "

@@ -675,7 +675,7 @@ def test_planner_bounded_at_10k_shards_256_queries(spark, tmp_path):
 
 def test_distributed_planner_wired_into_strategies(spark, reader,
                                                    monkeypatch):
-    """Past DRIVER_PRUNE_MAX_SHARDS manifest rows, _plan_query_batch
+    """Past DRIVER_PRUNE_MAX_SHARDS manifest rows, _plan
     switches to the DISTRIBUTED planner (bounded driver memory); all
     three batched strategies must return exactly the driver-planned
     rows — and with every plan degraded to ALL_SHARDS (the over-cap
@@ -727,15 +727,47 @@ def test_distributed_planner_single_query_paths(spark, reader,
                               .select(*cols).collect())),
             "bx": sorted(map(tuple, reader.get_bitexact(toks)
                              .select(*cols).collect())),
+            "bx_slab": sorted(map(tuple, reader.get_bitexact(toks, "slab")
+                                  .select(*cols).collect())),
             "many": sorted(map(tuple, reader.get_many({"a": toks})
                                .select("query", *cols).collect())),
         }
 
     want = snap()
     assert want["slab"] == want["linear"] == want["slab_sql"]
+    assert want["bx"] == want["bx_slab"] == want["get"]
     monkeypatch.setattr(reader, "DRIVER_PRUNE_MAX_SHARDS", 0)
     assert snap() == want
     monkeypatch.setattr(
         reader, "prune_shards_many_distributed",
         lambda qs, **kw: {q: BloomIndexReader.ALL_SHARDS for q in qs})
     assert snap() == want
+
+
+@pytest.mark.parametrize("regime", ["driver", "distributed"])
+def test_plan_contract_both_regimes(reader, monkeypatch, regime):
+    """_plan, the one shard planner, returns the same shard encoding in
+    both planner regimes: a match-all query and a query surviving in
+    every shard scan unrestricted (ALL_SHARDS), a definite miss plans
+    to [], and a selective query keeps prune_shards' sorted list. The
+    distributed regime never loads the driver prune matrices."""
+    every, selective = ["role=user"], ["tok=w02000"]
+    n = len(reader.manifest())
+    # fixture preconditions: one query everywhere, one really selective
+    assert len(reader.prune_shards(reader.query_bits(every), every)) == n
+    want = reader.prune_shards(reader.query_bits(selective), selective)
+    assert 0 < len(want) < n
+    if regime == "distributed":
+        monkeypatch.setattr(reader, "DRIVER_PRUNE_MAX_SHARDS", 0)
+
+        def no_driver_matrices():
+            raise AssertionError("driver prune matrices loaded")
+        monkeypatch.setattr(reader, "_prune_matrices", no_driver_matrices)
+    got = reader._plan({"empty": [], "every": every,
+                        "absent": ["tok=zzznope"], "sel": selective})
+    assert got["empty"][0].size == 0
+    assert got["empty"][1] is BloomIndexReader.ALL_SHARDS
+    assert got["every"][1] is BloomIndexReader.ALL_SHARDS
+    assert got["absent"][1] == []
+    assert got["sel"][1] == want
+    assert list(got["sel"][0]) == list(reader.query_bits(selective))

@@ -238,6 +238,25 @@ def test_remove_exact_reference_semantics(docs_setup):
     assert r.value_count() == 2
 
 
+def test_remove_exact_uses_planner_regime(docs_setup, monkeypatch):
+    """remove_exact plans through the reader's shared planner, so past
+    DRIVER_PRUNE_MAX_SHARDS it takes the distributed regime and never
+    loads the whole manifest onto the driver. The threshold is patched
+    on the class: remove_exact opens its own reader."""
+    spark, df, w, path = docs_setup
+    monkeypatch.setattr(BloomIndexReader, "DRIVER_PRUNE_MAX_SHARDS", 0)
+
+    def no_driver_matrices(self):
+        raise AssertionError("driver prune matrices loaded")
+    monkeypatch.setattr(BloomIndexReader, "_prune_matrices",
+                        no_driver_matrices)
+    one = _doc_frame(spark, [(1, "en", "hello world alpha")])
+    assert w.remove_exact(["tok=zzznope"], one, path) == 0
+    assert w.remove_exact(_toks((1, "en", "hello world alpha")),
+                          one, path) == 1
+    assert BloomIndexReader(spark, path).value_count() == 3
+
+
 def test_payload_multimap_roundtrip(docs_setup):
     """Generic payload storage (VERDICT r1 item 8): several values under
     one filter, payload returned from storage without re-joining source
